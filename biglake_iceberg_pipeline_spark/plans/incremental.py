@@ -123,18 +123,9 @@ def lock_free_stamp(
 ) -> None:
     """Record the source watermark on a table without writing data
     (manifest-only update under the commit lock)."""
-    import os
-
-    lock = gold._acquire_lock()
-    try:
-        manifest = gold._read_manifest()
+    with gold._locked_manifest() as manifest:
         manifest.setdefault("txns", {})[app] = version
         gold._commit(manifest)
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def daily_sales_partial(df: DataFrame) -> DataFrame:

@@ -1,10 +1,10 @@
 """FileIO: the object-store seam under the lakehouse metadata layer.
 
 Every byte of MANIFEST metadata (the core, its segments, the
-generation-CAS markers) moves through the six primitives below —
-exactly the operations cloud object stores expose natively — so a
-GCS/S3/Azure backend is an implementation of this class, not a
-rewrite of sinks/lakehouse.py (VERDICT r9 item 7):
+generation-CAS markers, the commit lock) moves through the six
+primitives below — exactly the operations cloud object stores expose
+natively — so a GCS/S3/Azure backend is an implementation of this
+class, not a rewrite of sinks/lakehouse.py (VERDICT r9 item 7):
 
 ==================  =====================  =========================
 primitive           local filesystem       object store mapping
@@ -37,10 +37,12 @@ prove the commit protocol never relies on an unlisted filesystem
 behavior (tests/test_fileio.py drives a full manifest lifecycle
 against it).
 
-Commit LOCKS stay on the local filesystem deliberately: they are a
-single-host optimization (fail-fast mutual exclusion); the
-correctness arbiter across hosts is the generation CAS, which maps
-to conditional PUTs above.
+The commit LOCK is a ``put_if_absent`` marker (``_commit.lock``)
+through this seam too, released with ``delete`` and broken past its
+stale age via ``mtime`` — the same rule as the generation-CAS
+markers. It stays a single-host, fail-fast mutex (maintenance that
+must not interleave with a commit relies on it); the correctness
+arbiter across hosts is the generation CAS.
 """
 
 from __future__ import annotations

@@ -35,6 +35,7 @@ On a real deployment swap this module for Spark's Iceberg catalog
 
 from __future__ import annotations
 
+import contextlib
 import copy
 import json
 import os
@@ -1243,6 +1244,20 @@ class CommitConflict(RuntimeError):
     they fail and the caller retries on the new state."""
 
 
+def _broke_stale_marker(io, marker: str, stale_after: float) -> bool:
+    """The one stale-break rule for put-if-absent markers (commit lock,
+    generation CAS): True when the caller should retry its claim —
+    the marker was older than ``stale_after`` and is now deleted, or
+    its holder released it between the failed claim and the stat."""
+    try:
+        if time.time() - io.mtime(marker) <= stale_after:
+            return False
+    except OSError:
+        return True
+    io.delete(marker)
+    return True
+
+
 class LakehouseTable:
     def __init__(self, path: str, partition_by: list[str] | None = None):
         self.path = path
@@ -1719,12 +1734,8 @@ class LakehouseTable:
                         "a concurrent writer (commit lock was broken "
                         "or bypassed); re-read and retry"
                     )
-                try:
-                    if time.time() - io.mtime(marker) > stale_after:
-                        io.delete(marker)
-                        continue
-                except OSError:
-                    continue  # claimant released between check/stat
+                if _broke_stale_marker(io, marker, stale_after):
+                    continue
                 raise CommitConflict(
                     f"manifest generation {nxt} is claimed by an "
                     "in-flight writer; retry shortly"
@@ -1741,30 +1752,36 @@ class LakehouseTable:
     def _acquire_lock(
         self, timeout: float = 30.0, stale_after: float = 120.0
     ) -> str:
-        """Commit mutex via O_EXCL lock file (works on any shared
-        filesystem without extra services — on a real deployment this
-        is the catalog's atomic swap). Locks older than
-        ``stale_after`` are broken: a crashed writer must not wedge
-        the table forever."""
+        """Take the commit mutex: a put-if-absent ``_commit.lock``
+        marker through the table's FileIO (O_EXCL create locally, a
+        conditional PUT on an object store), holding the writer's pid.
+        A single-host, fail-fast mutex — the generation CAS is the
+        arbiter across hosts. Markers older than ``stale_after`` are
+        broken: a crashed writer must not wedge the table forever.
+        Only ``_locked_manifest`` calls this; it also releases."""
+        io = fileio_for(self.path)
         lock = os.path.join(self.path, "_commit.lock")
-        os.makedirs(self.path, exist_ok=True)
+        io.makedirs(self.path)
         deadline = time.time() + timeout
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(os.getpid()).encode())
-                os.close(fd)
-                return lock
-            except FileExistsError:
-                try:
-                    if time.time() - os.path.getmtime(lock) > stale_after:
-                        os.remove(lock)
-                        continue
-                except OSError:
-                    continue  # holder released between check and stat
-                if time.time() > deadline:
-                    raise TimeoutError(f"commit lock busy: {lock}")
-                time.sleep(0.05)
+        while not io.put_if_absent(lock, str(os.getpid()).encode()):
+            if _broke_stale_marker(io, lock, stale_after):
+                continue
+            if time.time() > deadline:
+                raise TimeoutError(f"commit lock busy: {lock}")
+            time.sleep(0.05)
+        return lock
+
+    @contextlib.contextmanager
+    def _locked_manifest(self):
+        """Hold the commit lock and yield the manifest read under it;
+        the lock is released however the block exits. Callers commit
+        with ``self._commit(manifest)`` themselves — returning without
+        it leaves the table unchanged."""
+        lock = self._acquire_lock()
+        try:
+            yield self._read_manifest()
+        finally:
+            fileio_for(self.path).delete(lock)
 
     def _locked_commit(
         self,
@@ -1810,9 +1827,7 @@ class LakehouseTable:
         the delete-applied state, so the new files already exclude
         deleted rows — the deletes are materialized). ``delete_meta``
         adds per-delete-file metadata (kind / keys / applies_to)."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             snaps = manifest["snapshots"]
             tail = snaps[-1]["id"] if snaps else None
             if txn is not None:
@@ -2064,11 +2079,6 @@ class LakehouseTable:
                 manifest["last_row_rewrite_snapshot"] = snap_id
             self._commit(manifest)
             return snap_id, True
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     @property
     def snapshots(self) -> list[dict]:
@@ -2102,16 +2112,9 @@ class LakehouseTable:
         return self._read_manifest().get("last_row_rewrite_snapshot")
 
     def set_vector_index_meta(self, vec_col: str, meta: dict) -> None:
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             manifest.setdefault("vector_indexes", {})[vec_col] = meta
             self._commit(manifest)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     # ----------------------------------------------------------- writes
 
@@ -3502,16 +3505,9 @@ class LakehouseTable:
                 for c in cols
             },
         }
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             manifest["table_stats"] = stats
             self._commit(manifest)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
         return stats
 
     def stats(self) -> dict | None:
@@ -3678,9 +3674,7 @@ class LakehouseTable:
         # unreferenced sidecar (GC'd at expiry), never dangling
         # pointers
         rel = self._write_ndv_sidecar(new)
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             ptr = manifest.setdefault("ndv_sidecars", {})
             for f in new:
                 ptr[f] = rel
@@ -3692,11 +3686,6 @@ class LakehouseTable:
                 for f in legacy:
                     ptr.setdefault(f, legacy_rel)
             self._commit(manifest)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
         return len(new)
 
     def ndv_covered(self, files: list[str] | None = None) -> bool:
@@ -3860,16 +3849,9 @@ class LakehouseTable:
             },
             "source": "incremental",
         }
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             manifest["table_stats"] = stats
             self._commit(manifest)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
         return stats
 
     def rollback_to(self, snapshot_id: int) -> int:
@@ -3917,9 +3899,7 @@ class LakehouseTable:
         committed schema when one exists; incoming appends lacking a
         sort column skip the reshape for the missing columns."""
         new_order = list(columns) if columns else None
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             schema_json = manifest.get("schema")
             if new_order and schema_json:
                 from pyspark.sql.types import StructType
@@ -3939,11 +3919,6 @@ class LakehouseTable:
                 return  # no-op
             manifest["sort_order"] = new_order
             self._commit(manifest)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def sort_order(self) -> list[str] | None:
         return self._read_manifest().get("sort_order")
@@ -4020,9 +3995,7 @@ class LakehouseTable:
         retired: re-introducing it would surface the OLD files'
         bytes under the new column (name-based overlay) — exactly
         the resurrection field ids prevent, so it is refused."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             schema_json = manifest.get("schema")
             if not schema_json:
                 raise ValueError("table has no committed schema yet")
@@ -4055,11 +4028,6 @@ class LakehouseTable:
             snap = self._commit_schema_evolution(
                 manifest, new_json, rename=(old, new)
             )
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
         self._fire_commit_hooks("evolve-schema", snap)
         return snap
 
@@ -4127,9 +4095,7 @@ class LakehouseTable:
         )
 
         target_dt = _parse_datatype_string(new_type)
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             schema_json = manifest.get("schema")
             if not schema_json:
                 raise ValueError("table has no committed schema yet")
@@ -4174,11 +4140,6 @@ class LakehouseTable:
             snap = self._commit_schema_evolution(
                 manifest, StructType(new_fields).json()
             )
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
         self._fire_commit_hooks("evolve-schema", snap)
         return snap
 
@@ -4190,9 +4151,7 @@ class LakehouseTable:
         rename layer. Reference analog: the agent's
         cleaning/drop_column.sql, here as table-level metadata
         evolution instead of a DataFrame rewrite."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             schema_json = manifest.get("schema")
             if not schema_json:
                 raise ValueError("table has no committed schema yet")
@@ -4211,11 +4170,6 @@ class LakehouseTable:
             snap = self._commit_schema_evolution(
                 manifest, new_json, dropped=name
             )
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
         self._fire_commit_hooks("evolve-schema", snap)
         return snap
 
@@ -4240,9 +4194,7 @@ class LakehouseTable:
         The spec history is recorded in the manifest
         (``partition_spec_history``) for observability."""
         new_spec = list(new_partition_by) if new_partition_by else None
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             schema_json = manifest.get("schema")
             if new_spec:
                 entries = [_parse_spec_entry(x) for x in new_spec]
@@ -4296,11 +4248,6 @@ class LakehouseTable:
             )
             self._commit(manifest)
             self.partition_by = new_spec
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     # ---- snapshot tags (Iceberg tags: named, GC-protected refs) ----
 
@@ -4318,9 +4265,7 @@ class LakehouseTable:
         Retargeting an existing name requires ``replace=True``
         (silently moving a pin releases the old snapshot's GC
         protection — Iceberg refuses the same way)."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             snaps = manifest["snapshots"]
             if not snaps:
                 raise ValueError("cannot tag an empty table")
@@ -4336,29 +4281,17 @@ class LakehouseTable:
             tags[name] = sid
             self._commit(manifest)
             return sid
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def delete_tag(self, name: str) -> None:
         """Remove a tag, releasing its snapshot's GC protection.
         Unknown names raise — a typo must not leave the real pin
         holding storage forever with no signal."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             tags = manifest.get("tags", {})
             if name not in tags:
                 raise KeyError(f"tag {name!r} not found")
             del tags[name]
             self._commit(manifest)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def tags(self) -> dict[str, int]:
         return dict(self._read_manifest().get("tags", {}))
@@ -4394,9 +4327,7 @@ class LakehouseTable:
         LIST is captured so the branch stays readable even if the
         base snapshot later expires (its files are branch-protected,
         the log entry need not be)."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             branches = manifest.setdefault("branches", {})
             if name in branches:
                 raise ValueError(f"branch {name!r} already exists")
@@ -4430,11 +4361,6 @@ class LakehouseTable:
             }
             self._commit(manifest)
             return base
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def branches(self) -> dict[str, dict]:
         return {
@@ -4480,9 +4406,7 @@ class LakehouseTable:
         no-ops instead of restaging published rows on a new branch
         of the same name). Callers must delete a skipped replay's
         re-staged files — this method never references them."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             br = self._branch_state(manifest, name)
             if txn is not None:
                 app_id, version = txn
@@ -4532,11 +4456,6 @@ class LakehouseTable:
                 br["schema"] = schema_json
             self._commit(manifest)
             return bid
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def fast_forward(
         self,
@@ -4576,9 +4495,7 @@ class LakehouseTable:
                 _, metrics = check(staged, audit_rules, "warn")
                 if any(v > 0 for v in metrics.values()):
                     raise ExpectationsFailed(metrics)
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             br = self._branch_state(manifest, name)
             # identity check, not a commit COUNT: a branch deleted and
             # recreated under the same name (even with the same number
@@ -4627,11 +4544,6 @@ class LakehouseTable:
                     ledger[app] = ver
             del manifest["branches"][name]
             self._commit(manifest)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
         if last != tail:
             self._fire_commit_hooks("fast_forward", last)
         return last
@@ -4639,18 +4551,11 @@ class LakehouseTable:
     def delete_branch(self, name: str) -> None:
         """Abandon a branch: its staged files lose GC protection and
         the next orphan sweep reclaims them. Unknown names raise."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             if name not in manifest.get("branches", {}):
                 raise KeyError(f"branch {name!r} not found")
             del manifest["branches"][name]
             self._commit(manifest)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
 
     # ---- per-file Bloom filters (point-lookup file skipping) -------
@@ -4781,9 +4686,7 @@ class LakehouseTable:
                 r["bloom"]
             )
         rel = self._write_bloom_sidecar(blob)
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             bp = manifest.setdefault("bloom_sidecars", {})
             for f, cols in want.items():
                 bp[f] = {"blob": rel, "cols": cols}
@@ -4795,11 +4698,6 @@ class LakehouseTable:
                 set(manifest.get("bloom_columns", [])) | set(columns)
             )
             self._commit(manifest)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
         return len(want)
 
     def compact_ndv_sidecars(self, max_blobs: int = 8) -> int:
@@ -4810,11 +4708,27 @@ class LakehouseTable:
         Returns the number of blobs merged, 0 when under the
         threshold. Old blobs become unreferenced and are reaped by
         the next expiry's GC once past the grace window."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
-            ptr = manifest.get("ndv_sidecars", {})
-            blobs = set(ptr.values())
+        return self._compact_sidecars("ndv", max_blobs)
+
+    def compact_bloom_sidecars(self, max_blobs: int = 8) -> int:
+        """The NDV compaction's twin for bloom sidecar blobs."""
+        return self._compact_sidecars("bloom", max_blobs)
+
+    def _compact_sidecars(self, kind: str, max_blobs: int) -> int:
+        """Merge the ``kind`` ("ndv" / "bloom") sidecar blobs into one
+        once more than ``max_blobs`` are referenced. NDV pointers are
+        the blob path; bloom pointers are ``{"blob", "cols"}``."""
+        key = f"{kind}_sidecars"
+
+        def blob(p):
+            return p["blob"] if kind == "bloom" else p
+
+        def repoint(p, rel):
+            return {**p, "blob": rel} if kind == "bloom" else rel
+
+        with self._locked_manifest() as manifest:
+            ptr = manifest.get(key, {})
+            blobs = {blob(p) for p in ptr.values()}
             if len(blobs) <= max_blobs:
                 return 0
             contents: dict[str, dict] = {}
@@ -4826,26 +4740,26 @@ class LakehouseTable:
                     )
                 except (OSError, ValueError):
                     continue  # lost blob: its pointers stay as-is
-            # each file's sketch comes from its AUTHORITATIVE blob —
+            # each file's entry comes from its AUTHORITATIVE blob —
             # never from whichever blob happened to iterate last (a
             # superseded blob can carry a stale entry for the same
             # file)
             merged = {
-                f: contents[rel][f]
-                for f, rel in ptr.items()
-                if rel in contents and f in contents[rel]
+                f: contents[blob(p)][f]
+                for f, p in ptr.items()
+                if blob(p) in contents and f in contents[blob(p)]
             }
             readable = set(contents)
             if len(readable) <= 1 or not merged:
                 return 0
-            new_rel = self._write_ndv_sidecar(merged)
+            new_rel = self._write_stats_sidecar(kind, merged)
             # pointers at unreadable blobs (or at entries a readable
             # blob is missing) are LEFT UNTOUCHED — the same
             # self-heal contract as everywhere else (re-sketch on
             # next refresh), never silently dropped coverage
-            manifest["ndv_sidecars"] = {
-                f: (new_rel if f in merged else rel)
-                for f, rel in ptr.items()
+            manifest[key] = {
+                f: repoint(p, new_rel) if f in merged else p
+                for f, p in ptr.items()
             }
             # restart the GC grace clock on the superseded blobs: a
             # reader holding the PRE-compaction manifest must get the
@@ -4855,62 +4769,6 @@ class LakehouseTable:
                 io.touch(os.path.join(self.path, rel))
             self._commit(manifest)
             return len(readable)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
-
-
-    def compact_bloom_sidecars(self, max_blobs: int = 8) -> int:
-        """Merge scattered bloom sidecar blobs into one (the NDV
-        compaction's twin — every refresh batch writes its own blob,
-        so steady appends accumulate O(refreshes) small files).
-        Same contracts: each file's filters come from its
-        AUTHORITATIVE blob, pointers at unreadable blobs are left to
-        self-heal, superseded blobs get a fresh GC grace clock."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
-            ptr = manifest.get("bloom_sidecars", {})
-            blobs = {e["blob"] for e in ptr.values()}
-            if len(blobs) <= max_blobs:
-                return 0
-            contents: dict[str, dict] = {}
-            io = fileio_for(self.path)
-            for rel in sorted(blobs):
-                try:
-                    contents[rel] = json.loads(
-                        io.read_bytes(os.path.join(self.path, rel))
-                    )
-                except (OSError, ValueError):
-                    continue
-            merged = {
-                f: contents[e["blob"]][f]
-                for f, e in ptr.items()
-                if e["blob"] in contents and f in contents[e["blob"]]
-            }
-            readable = set(contents)
-            if len(readable) <= 1 or not merged:
-                return 0
-            new_rel = self._write_bloom_sidecar(merged)
-            manifest["bloom_sidecars"] = {
-                f: (
-                    {"blob": new_rel, "cols": e["cols"]}
-                    if f in merged
-                    else e
-                )
-                for f, e in ptr.items()
-            }
-            for rel in readable:
-                io.touch(os.path.join(self.path, rel))
-            self._commit(manifest)
-            return len(readable)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def _gc_ndv_sidecars(self, manifest: dict) -> None:
         """Delete stats blobs no pointer references (all their files
@@ -5086,17 +4944,17 @@ class LakehouseTable:
         first, second = sorted(
             (self, dest), key=lambda t: os.path.realpath(t.path)
         )
-        lock = first._acquire_lock()
-        dest_lock = None
-        try:
-            dest_lock = second._acquire_lock()
+        with (
+            first._locked_manifest() as m1,
+            second._locked_manifest() as m2,
+        ):
+            manifest, dest_manifest = (m1, m2) if first is self else (m2, m1)
             # the emptiness re-check must hold the DESTINATION's
             # commit lock: two concurrent clone_to calls to the same
             # dest both pass the unlocked check above, and the later
             # _commit would silently overwrite the earlier clone
-            if dest._read_manifest()["snapshots"]:
+            if dest_manifest["snapshots"]:
                 raise ValueError(f"{dest_path!r} already has snapshots")
-            manifest = self._read_manifest()
             if not manifest["snapshots"]:
                 raise ValueError("cannot clone an empty table")
             # deep copy — via to_plain(): json's C encoder reads raw
@@ -5149,14 +5007,6 @@ class LakehouseTable:
             if dest.path not in manifest["clones"]:
                 manifest["clones"].append(dest.path)
             self._commit(manifest)
-        finally:
-            for lk in (dest_lock, lock):
-                if lk is None:
-                    continue
-                try:
-                    os.remove(lk)
-                except OSError:
-                    pass
         return dest
 
     def _clone_protected_files(self, manifest: dict) -> set[str]:
@@ -5216,9 +5066,7 @@ class LakehouseTable:
         returns the deleted paths."""
         data_root = os.path.join(self.path, "data")
         deletes_root = os.path.join(self.path, "deletes")
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             live = {
                 f
                 for s in manifest["snapshots"]
@@ -5284,11 +5132,6 @@ class LakehouseTable:
                     except OSError:
                         pass
             return removed
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def expire_snapshots(
         self,
@@ -5306,9 +5149,7 @@ class LakehouseTable:
         ``keep_last`` still retains the newest N regardless of age, so
         the two compose as 'expire history older than X but always
         keep the last N'. Tagged snapshots never expire either way."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             snaps = manifest["snapshots"]
             if len(snaps) <= keep_last:
                 # still reap stats blobs orphaned by crashed
@@ -5369,11 +5210,6 @@ class LakehouseTable:
             self._gc_ndv_sidecars(manifest)
             self._commit(manifest)
             return [s["id"] for s in expired]
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def maintain(
         self,
@@ -5554,9 +5390,7 @@ class LakehouseTable:
         the number of segments folded away (0 = under threshold).
         One O(history) rewrite under the commit lock — maintenance-
         grade, same class as data-file compaction."""
-        lock = self._acquire_lock()
-        try:
-            manifest = self._read_manifest()
+        with self._locked_manifest() as manifest:
             plan = manifest.get(_SEG_PLAN_KEY)
             n = len(plan["segments"]) if plan else 0
             if n <= max_segments:
@@ -5582,11 +5416,6 @@ class LakehouseTable:
                 if name not in kept:
                     io.delete(os.path.join(seg_dir, name))
             return n - len(kept)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     # ---- merge-on-read row-level deletes (Iceberg v2 delete files) --
     # A DELETE/MERGE at 100 TB must not rewrite 100 TB: instead of the

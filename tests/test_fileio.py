@@ -184,10 +184,9 @@ def test_cas_conflict_on_object_store(mem_table):
 
 
 @pytest.fixture
-def mem_stats_table(tmp_path, monkeypatch):
+def mem_stats_table(tmp_path):
     """mem:// metadata + two REAL local parquet data files (data files
-    are Spark-written and deliberately outside the seam). chdir keeps
-    the local commit-lock litter ('mem:' dirs) inside tmp_path."""
+    are Spark-written and deliberately outside the seam)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -195,7 +194,6 @@ def mem_stats_table(tmp_path, monkeypatch):
         LakehouseTable,
     )
 
-    monkeypatch.chdir(tmp_path)
     mem = InMemoryFileIO()
     register_fileio("mem://", mem)
     try:
@@ -277,6 +275,20 @@ def test_sidecar_compaction_and_gc_on_object_store(
     t._gc_ndv_sidecars(m)
     names = [b for b in mem.list(f"{root}/stats") if b.startswith("ndv-")]
     assert names == [merged_rel.split("/")[-1]]
+    # the bloom twin: each file's filter comes from its own blob and
+    # its pointer keeps its column list
+    for f in files:
+        assert t.refresh_bloom_filters(spark, ["k"], files=[f]) == 1
+    before = t._read_manifest()["bloom_sidecars"]
+    assert len({e["blob"] for e in before.values()}) == 2
+    assert t.compact_bloom_sidecars(max_blobs=1) == 2
+    after = t._read_manifest()["bloom_sidecars"]
+    (new_blob,) = {e["blob"] for e in after.values()}
+    merged = json.loads(mem.read_bytes(f"{root}/{new_blob}"))
+    for f, e in before.items():
+        assert after[f] == {"blob": new_blob, "cols": e["cols"]}
+        old_blob = json.loads(mem.read_bytes(f"{root}/{e['blob']}"))
+        assert merged[f] == old_blob[f]
 
 
 def test_rate_limit_cursor_on_object_store(mem_stats_table):
@@ -326,3 +338,39 @@ def test_no_raw_metadata_io_outside_the_seam():
         ln for ln in ss_src.splitlines() if "with open(" in ln
     ]
     assert raw_opens == ['        with open(_DBG_PATH, "a") as f:']
+
+
+def test_commit_lock_lives_in_the_object_store(tmp_path, monkeypatch):
+    """The commit lock is a put-if-absent marker through the seam: a
+    mem:// commit leaves nothing on the local filesystem, a fresh
+    marker makes a contender time out, and a stale one is broken by
+    the next commit."""
+    import os
+
+    from biglake_iceberg_pipeline_spark.sinks.lakehouse import (
+        LakehouseTable,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    mem = InMemoryFileIO()
+    register_fileio("mem://", mem)
+    try:
+        t = LakehouseTable("mem://tables/t1")
+        t.set_vector_index_meta("emb", {"path": "idx/emb"})
+        assert not os.path.exists("mem:")
+        assert os.listdir(tmp_path) == []
+        lock = "mem://tables/t1/_commit.lock"
+        assert not mem.exists(lock)  # released after the commit
+        # live holder: contender waits, then times out
+        assert mem.put_if_absent(lock, b"99999")
+        with pytest.raises(TimeoutError, match="commit lock busy"):
+            t._acquire_lock(timeout=0.3)
+        assert "emb2" not in t.vector_index_meta()
+        # crashed holder: marker aged past stale_after is broken
+        with mem._lock:
+            mem._ctime[lock] -= 1_000
+        t.set_vector_index_meta("emb2", {"path": "idx/emb2"})
+        assert set(t.vector_index_meta()) == {"emb", "emb2"}
+        assert not mem.exists(lock)
+    finally:
+        unregister_fileio("mem://")

@@ -2713,15 +2713,11 @@ def test_segment_reset_cadence_with_map_only_commits(spark, tmp_path):
                 spark.createDataFrame([(i,)], "id long").coalesce(1)
             )
             # a map-only commit, like refresh_ndv_sketches does
-            lock = t._acquire_lock()
-            try:
-                m = t._read_manifest()
+            with t._locked_manifest() as m:
                 m.setdefault("ndv_sidecars", {})[
                     f"fake-file-{i}"
                 ] = f"stats/fake-{i}"
                 t._commit(m)
-            finally:
-                os.remove(lock)
         snaps = t.snapshots
         assert len(snaps[-1]["files"]) == 8
         assert t.read(spark).count() == 8
@@ -2766,15 +2762,11 @@ def test_empty_reset_tail_reused_mid_list_does_not_truncate(
         # at-cadence tail, the second reuses it (clean: its entries
         # are untouched) and appends another tail behind it
         for i in range(2):
-            lock = t._acquire_lock()
-            try:
-                m = t._read_manifest()
+            with t._locked_manifest() as m:
                 m.setdefault("ndv_sidecars", {})[
                     f"fake-{i}"
                 ] = f"stats/fake-{i}"
                 t._commit(m)
-            finally:
-                os.remove(lock)
         t.append(df)
         snaps = LakehouseTable(t.path).snapshots
         assert [len(s["files"]) for s in snaps] == list(range(1, 14))
@@ -2799,27 +2791,19 @@ def test_keyless_predecessor_does_not_resurrect_files(tmp_path):
     from biglake_iceberg_pipeline_spark.sinks import lakehouse as lh
 
     t = lh.LakehouseTable(str(tmp_path / "t"))
-    lock = t._acquire_lock()
-    try:
-        m = t._read_manifest()
+    with t._locked_manifest() as m:
         m["snapshots"] = [
             {"id": 1, "operation": "append", "files": ["f0.parquet"]},
             {"id": 2, "operation": "foreign"},  # keyless
         ]
         t._commit(m)
-    finally:
-        os.remove(lock)
     # a later commit appends a snapshot behind the keyless one
     t2 = lh.LakehouseTable(t.path)
-    lock = t2._acquire_lock()
-    try:
-        m = t2._read_manifest()
+    with t2._locked_manifest() as m:
         m["snapshots"] = list(m["snapshots"]) + [
             {"id": 3, "operation": "append", "files": ["f2.parquet"]}
         ]
         t2._commit(m)
-    finally:
-        os.remove(lock)
     snaps = lh.LakehouseTable(t.path).snapshots
     assert snaps[0]["files"] == ["f0.parquet"]
     assert snaps[1]["files"] == []  # keyless reads empty

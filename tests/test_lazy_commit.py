@@ -158,9 +158,7 @@ def test_file_added_at_watermark_heals_after_bypass(tmp_path):
     equality-delete-scope stamp."""
     t = LakehouseTable(str(tmp_path / "t"))
     _append(t, ["data/a.parquet"])
-    lock = t._acquire_lock()
-    try:
-        m = t._read_manifest()
+    with t._locked_manifest() as m:
         m["snapshots"] = list(m["snapshots"]) + [
             {
                 "id": 2,
@@ -169,8 +167,6 @@ def test_file_added_at_watermark_heals_after_bypass(tmp_path):
             }
         ]
         t._commit(m)  # no stamp for spliced, watermark stays at 1
-    finally:
-        os.remove(lock)
     _append(t, ["data/c.parquet"])
     m = t._read_manifest()
     fa = m["file_added_at"]
@@ -224,9 +220,7 @@ def test_pending_entry_mutation_disables_passthrough(tmp_path):
     ACTUAL list, not the stale delta."""
     t = LakehouseTable(str(tmp_path / "t"))
     _append(t, ["data/a.parquet"])
-    lock = t._acquire_lock()
-    try:
-        m = t._read_manifest()
+    with t._locked_manifest() as m:
         entry = m["snapshots"][-1]
         if isinstance(entry, _LazySnapshot):
             entry["files"] = ["data/rewritten.parquet"]
@@ -234,8 +228,6 @@ def test_pending_entry_mutation_disables_passthrough(tmp_path):
         else:
             entry["files"] = ["data/rewritten.parquet"]
         t._commit(m)
-    finally:
-        os.remove(lock)
     assert LakehouseTable(t.path).snapshots[-1]["files"] == [
         "data/rewritten.parquet"
     ]

@@ -25,7 +25,6 @@ exactly the metadata path (`_read_manifest` → mutate → `_commit`)."""
 
 from __future__ import annotations
 
-import os
 import random
 
 import pytest
@@ -34,13 +33,9 @@ from biglake_iceberg_pipeline_spark.sinks import lakehouse as lh
 
 
 def _commit(t, mutate):
-    lock = t._acquire_lock()
-    try:
-        m = t._read_manifest()
+    with t._locked_manifest() as m:
         mutate(m)
         t._commit(m)
-    finally:
-        os.remove(lock)
 
 
 # Mutation-verified seeds, RE-RUN under the r11 op distribution
